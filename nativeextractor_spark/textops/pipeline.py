@@ -7,11 +7,11 @@ Composes the curation operators in the standard web-corpus order
    language allowlist); documents failing any enabled rule set drop out.
    The repetition rules default to the FAITHFUL span-union
    ``dup{n}gram_char_frac`` flavor (r5; Rae et al. 2021), whose pass
-   rates are comparable to the published Gopher numbers — it costs one
-   running-sum window over the dup-gram rows. Pass
-   ``repetition_flavor="count"`` for the cheaper count-weighted upper
-   bound (every overlapping occurrence counts), which can only filter
-   MORE aggressively at the paper's unchanged thresholds. On the
+   rates are comparable to the published Gopher numbers. Pass
+   ``repetition_flavor="count"`` for the count-weighted upper bound
+   (every overlapping occurrence counts), which can only filter MORE
+   aggressively at the paper's unchanged thresholds. Both rule sets run
+   in one Arrow kernel pass over the corpus. On the
    synthetic sf0.01 lines corpus the two flavors happen to agree
    (144/200 pass both — its dup-grams rarely overlap); on real web text
    with overlapping repeats the count flavor over-filters, which is why
@@ -114,7 +114,7 @@ def curate_corpus(
         F.min("_text").alias("_text"), F.count("*").alias("_c")
     ).transform(stage("curate"))
     # AQE sizes the collapse shuffle's output partitions by BYTES, but the
-    # downstream repetition rules are CPU-dense zero-shuffle per-row folds
+    # downstream repetition rules are a CPU-dense zero-shuffle per-row kernel
     # (~ms/KB, orders of magnitude more CPU per byte than relational ops)
     # that INHERIT this layout — on a small corpus AQE happily coalesces
     # to 1 partition and the whole filter stage runs on one core (r6:
@@ -170,22 +170,15 @@ def curate_corpus(
         if repetition_filter and keep is None:
             # repetition_flavor="span" (default, r5) is the paper-faithful
             # span-union dup-gram rule (pass rates comparable to published
-            # Gopher numbers); "count" is the cheaper upper bound — see the
-            # module docstring note.
-            #
-            # Stage the (small) per-doc metrics frame BEFORE filtering:
-            # predicate pushdown would otherwise substitute the pass flag
-            # down through the projection chain, duplicating the heavy
-            # multi-use sorted-array folds into the filter (~3x the
-            # per-row work, r6) — materializing first evaluates each fold
-            # exactly once and makes the filter a free scan.
+            # Gopher numbers); "count" is the upper bound — see the module
+            # docstring note.
             r = gopher_repetition(
                 df,
                 text_col="_text",
                 id_col="_id",
                 dup_flavor=repetition_flavor,
                 assume_unique=True,  # ids collapsed at pipeline entry
-            ).transform(stage("curate-repetition"))
+            )
             rk = r.where("repetition_pass").select(F.col("doc_id").alias("_id"))
             keep = rk if keep is None else keep.join(rk, "_id")
         if languages:
@@ -196,7 +189,7 @@ def curate_corpus(
             keep = lk if keep is None else keep.join(lk, "_id")
         # checkpoint BEFORE counting: the count and every later stage then
         # read the materialized result instead of re-running the filter
-        # chain (the 9-way n-gram aggregate is the pipeline's heaviest op)
+        # chain (the 9-way n-gram kernel is the pipeline's heaviest op)
         df = df.join(keep, "_id").transform(stage("curate"))
         metrics["after_filters"] = df.count()
     else:

@@ -506,55 +506,13 @@ def test_oracle_lloyd_kmeans_is_independent_and_agrees():
     assert [[repr(x) for x in c] for c in a] == [[repr(x) for x in c] for c in b]
 
 
-def test_gopher_repetition_hash_vs_string_flavor(spark):
-    """The no-string-allocation gram-key flavor (default) and the
-    oracle-replayable string flavor compute identical metrics — including
-    on documents with (count, length)-tied top grams, where the flavors
-    pick different grams but the SAME count*length contribution."""
-    from nativeextractor_spark.textops.lines import gopher_repetition
-
-    rows = [
-        (1, "aa bb aa bb aa bb cc dd ee ff gg hh ii jj"),
-        (2, "one two three four five six seven eight nine ten"),
-        # all 2-grams unique (count tie at 1) with differing lengths
-        (3, "x yyyy z w vv uuu"),
-        (4, None),
-        (5, "line\nline\nline\nother stuff here now"),
-    ] + [(100 + i, f"doc {i} body " + " ".join(f"t{i}w{j}" for j in range(30)))
-         for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    h = sorted(
-        map(tuple, gopher_repetition(df, gram_key="hash", engine="sql").collect())
-    )
-    s = sorted(
-        map(
-            tuple,
-            gopher_repetition(df, gram_key="string", engine="sql").collect(),
-        )
-    )
-    assert h == s
-    plan = (
-        gopher_repetition(df, gram_key="hash", engine="sql")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "array_join" not in plan  # no gram string is ever built
-    with pytest.raises(ValueError):
-        gopher_repetition(df, gram_key="nope")
-    with pytest.raises(ValueError):
-        gopher_repetition(df, engine="nope")
-
-
-def test_gopher_repetition_kernel_matches_sql_engines(spark):
-    """The r8 Arrow-kernel engine (the default) must be column- and
-    value-identical to the SQL expression engines for BOTH dup flavors,
-    across randomized docs with planted repeats, overlapping repeats,
-    multibyte tokens, empty/null texts, newline-heavy docs, and
-    (count, length)-tied top grams."""
+def _gopher_random_docs():
+    """Randomized docs with planted and overlapping repeats, multibyte
+    and empty tokens, newline-heavy texts, plus dense small-vocab docs
+    (adjacent-run boundaries) and the edge rows: (count, length)-tied top
+    grams, fewer than n tokens, maximal overlap, runs at gap n, double
+    separators, None and ""."""
     import random
-
-    from nativeextractor_spark.textops.lines import gopher_repetition
 
     rng = random.Random(1234)
     vocab = [f"w{i}" for i in range(25)] + ["ř", "čč", "x", "yyyy", ""]
@@ -565,6 +523,13 @@ def test_gopher_repetition_kernel_matches_sql_engines(spark):
         (3, "a b c a b c a b c"),
         (4, "x\n\nx\n\ny z  q"),  # empty lines + double separators
         (5, "aa bb aa bb cc\naa bb aa bb cc\ntail bit"),
+        (6, "aa bb aa bb aa bb cc dd ee ff gg hh ii jj"),
+        (7, "x yyyy z w vv uuu"),  # all 2-grams count-tied at 1
+        (8, "line\nline\nline\nother stuff here now"),
+        (9, "one two three four"),  # fewer than 5 tokens
+        (10, "x x x x x x x x x x x x"),  # maximal overlap
+        (11, "a b c d e a b c d e f g h i j a b c d e"),  # runs at gap n
+        (12, "s  s  s  s  s  s  s"),  # empty tokens (double separators)
     ]
     for i in range(60):
         toks = [vocab[rng.randrange(len(vocab))] for _ in range(rng.randrange(1, 80))]
@@ -574,63 +539,104 @@ def test_gopher_repetition_kernel_matches_sql_engines(spark):
         text = " ".join(toks)
         if rng.random() < 0.4:  # newline-separated lines with repeats
             text = text.replace(" ", "\n", rng.randrange(1, 4))
-        rows.append((10 + i, text))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for flavor in ("count", "span"):
-        k = gopher_repetition(
-            df, dup_flavor=flavor, assume_unique=True, engine="kernel"
-        )
-        q = gopher_repetition(
-            df, dup_flavor=flavor, assume_unique=True, engine="sql"
-        )
-        assert k.columns == q.columns
-        kr = sorted(map(tuple, k.collect()))
-        qr = sorted(map(tuple, q.collect()))
-        assert kr == qr, flavor
+        rows.append((100 + i, text))
+    for i in range(20):
+        n = rng.randint(1, 120)
+        words = " ".join(rng.choice(["aa", "bb", "cc", "d", "longword"]) for _ in range(n))
+        rows.append((200 + i, words))
+    return rows
 
 
-def test_gopher_dup_fold_matches_full_fold(spark):
-    """The r6 dup-only fold (_dup_n_local_expr: (gk, i) sort, gram length
-    priced once per duplicated-run close) computes the same duplicated-
-    gram char sum as the r5 full fold's dup field (_per_n_local_expr:
-    per-element length folds), for both gram-key flavors, across
-    randomized docs with planted exact repeats, overlapping repeats,
-    multibyte tokens, and degenerate shapes."""
-    import random
+def _gopher_from_definition(text, dup_span: bool) -> tuple:
+    """Gopher repetition metrics straight from their definitions: lines
+    and n-grams (token tuples) counted with a Counter, the span flavor as
+    the set of covered character positions — no gram codes, no run
+    merging, no SQL."""
+    import math
+    import re
+    from collections import Counter
 
-    from pyspark.sql import functions as F
+    def t6(num, den):
+        return math.floor(num * 1000000.0 / max(den, 1)) / 1000000
 
+    text = text or ""
+    lines = Counter(text.split("\n"))
+    out = [
+        t6(sum(c - 1 for c in lines.values()), sum(lines.values())),
+        t6(
+            sum((c - 1) * len(ln) for ln, c in lines.items()),
+            sum(c * len(ln) for ln, c in lines.items()),
+        ),
+    ]
+    toks = re.split("[ \n]", text)
+    offs = [sum(len(x) + 1 for x in toks[:i]) for i in range(len(toks))]
+    for n in range(2, 11):
+        grams = [tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+        count = Counter(grams)
+
+        def chars(g):
+            return sum(map(len, g)) + n - 1
+
+        if not grams:
+            out.append(0.0)
+        elif n <= 4:
+            top = max(count, key=lambda g: (count[g], chars(g)))
+            out.append(t6(count[top] * chars(top), len(text)))
+        elif not dup_span:
+            dup = sum(c * chars(g) for g, c in count.items() if c > 1)
+            out.append(t6(dup, len(text)))
+        else:
+            covered = set()
+            for i, g in enumerate(grams):
+                if count[g] > 1:
+                    covered.update(range(offs[i], offs[i] + chars(g)))
+            out.append(t6(len(covered), len(text)))
+    return tuple(out)
+
+
+@pytest.mark.parametrize("flavor", ["count", "span"])
+def test_gopher_kernel_matches_definition(flavor):
+    """The per-document kernel (factorized gram codes extended one token
+    per size, vectorized run merging) equals the metrics computed from
+    their definitions on the randomized and edge-case docs — a reference
+    sharing no code or SQL with the kernel or the DuckDB oracle."""
     from nativeextractor_spark.textops.lines import (
-        _dup_n_local_expr,
-        _per_n_local_expr,
+        _METRIC_NAMES,
+        _doc_repetition_metrics,
     )
 
-    rng = random.Random(77)
-    vocab = [f"w{i}" for i in range(30)] + ["ř", "čč", "x", "yyyy"]
-    rows = [(0, None), (1, ""), (2, "single"), (3, "a b c d")]
-    for i in range(40):
-        toks = [vocab[rng.randrange(len(vocab))] for _ in range(rng.randrange(1, 60))]
-        if rng.random() < 0.7 and len(toks) >= 8:
-            # plant a repeated run (possibly overlapping its first copy)
-            s = rng.randrange(0, len(toks) - 7)
-            run = toks[s : s + rng.randrange(5, 8)]
-            ins = rng.randrange(0, len(toks))
-            toks = toks[:ins] + run + toks[ins:]
-        rows.append((10 + i, " ".join(toks)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for gram_key in ("hash", "string"):
-        text = F.coalesce(F.col("text"), F.lit(""))
-        base = df.select(
-            "doc_id", F.split(text, "[ \n]").alias("_toks")
-        ).withColumn("_tlens", F.expr("transform(_toks, t -> length(t))"))
-        for n in (5, 7, 10):
-            got = base.select(
-                "doc_id",
-                F.expr(_dup_n_local_expr(n, gram_key)).alias("dup_new"),
-                F.expr(_per_n_local_expr(n, gram_key))["dup"].alias("dup_old"),
-            )
-            bad = got.where(F.col("dup_new") != F.col("dup_old")).collect()
-            assert not bad, (gram_key, n, bad[:3])
+    for doc_id, text in _gopher_random_docs():
+        got = _doc_repetition_metrics(text, flavor == "span")
+        want = _gopher_from_definition(text, flavor == "span")
+        assert got == want, (doc_id, dict(zip(_METRIC_NAMES, zip(got, want))))
+
+
+@pytest.mark.parametrize("flavor", ["count", "span"])
+def test_gopher_repetition_matches_duckdb_oracle_randomized(
+    spark, oracle_replay, flavor
+):
+    """Both dup flavors equal their contract oracles (gopher_repetition /
+    gopher_repetition_span) replayed over randomized and edge-case docs
+    instead of the contract's lines-ified corpus."""
+    from nativeextractor_spark.queries import (
+        _DOCS_WITH_LINES_SQL,
+        O_GOPHER_REPETITION,
+        O_GOPHER_REPETITION_SPAN,
+    )
+    from nativeextractor_spark.textops.lines import gopher_repetition
+
+    oracle = O_GOPHER_REPETITION if flavor == "count" else O_GOPHER_REPETITION_SPAN
+    sql = oracle.replace(
+        _DOCS_WITH_LINES_SQL,
+        "d AS (SELECT doc_id, coalesce(text, '') AS text FROM documents)",
+    )
+    assert sql != oracle
+    docs = _gopher_random_docs()
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got, want = oracle_replay(
+        gopher_repetition(df, dup_flavor=flavor, assume_unique=True), sql, docs
+    )
+    assert got == want
 
 
 def test_duplicate_spans_keep_first_and_idempotent(spark):
@@ -682,6 +688,8 @@ def test_duplicate_spans_keep_first_and_idempotent(spark):
     assert h == s
     with pytest.raises(ValueError):
         duplicate_span_stats(df, keep="nope")
+    with pytest.raises(ValueError):
+        duplicate_span_stats(df, gram_key="nope")
 
 
 def test_duplicate_spans_duplicate_ids_collapse(spark):
@@ -738,15 +746,10 @@ def test_gopher_repetition_span_flavor(spark):
             assert getattr(s[d], f"top{n}gram_char_frac") == getattr(
                 c[d], f"top{n}gram_char_frac"
             )
-    # gram keys agree under span too
-    s2 = sorted(
-        map(tuple, gopher_repetition(df, dup_flavor="span", gram_key="string").collect())
-    )
-    assert s2 == sorted(map(tuple, gopher_repetition(df, dup_flavor="span").collect()))
     with pytest.raises(ValueError):
         gopher_repetition(df, dup_flavor="nope")
-    # r4 review 3: duplicate ids collapse (min text) under the span
-    # flavor instead of interleaving the offset arrays
+    # duplicate ids collapse (min text) under the span flavor: one row
+    # per id
     dup = spark.createDataFrame(
         [(1, "a b a b a b"), (1, "z z z recrawl"), (2, "x y")],
         "doc_id long, text string",
@@ -762,68 +765,6 @@ def test_gopher_repetition_span_flavor(spark):
         ).collect()
     }[1]
     assert tuple(one) == tuple(ref)
-
-
-def test_gopher_span_local_vs_explode_engines(spark):
-    """r6: the zero-shuffle row-local span engine (token-interval union
-    folds) is output-identical to the r4/r5 distributed explode engine on
-    randomized repetitive docs — the two shapes share no code path beyond
-    tokenization, so agreement pins the interval-mapping proof in
-    _span_dup_chars_expr. Small vocab forces dense duplicated grams,
-    overlapping occurrences, and adjacent-run boundaries (j = i+n, the
-    one-separator-gap case)."""
-    import random
-
-    from nativeextractor_spark.textops.lines import gopher_repetition
-
-    rng = random.Random(20260817)
-    docs = [
-        (
-            i,
-            " ".join(
-                rng.choice(["aa", "bb", "cc", "d", "longword"])
-                for _ in range(rng.randint(1, 120))
-            ),
-        )
-        for i in range(30)
-    ]
-    docs += [
-        (100, ""),
-        (101, None),
-        (102, "one two three four"),  # fewer than 5 tokens
-        (103, "x x x x x x x x x x x x"),  # maximal overlap
-        (104, "a b c d e a b c d e f g h i j a b c d e"),  # runs at gap n
-        (105, "s  s  s  s  s  s  s"),  # empty tokens (double separators)
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    for gk in ("hash", "string"):
-        loc = sorted(
-            map(
-                tuple,
-                gopher_repetition(
-                    df,
-                    dup_flavor="span",
-                    span_engine="local",
-                    gram_key=gk,
-                    assume_unique=True,
-                ).collect(),
-            )
-        )
-        exp = sorted(
-            map(
-                tuple,
-                gopher_repetition(
-                    df,
-                    dup_flavor="span",
-                    span_engine="explode",
-                    gram_key=gk,
-                    assume_unique=True,
-                ).collect(),
-            )
-        )
-        assert loc == exp, f"engine mismatch under gram_key={gk}"
-    with pytest.raises(ValueError):
-        gopher_repetition(df, dup_flavor="span", span_engine="nope")
 
 
 def test_drop_duplicate_lines_hash_vs_string_flavor(spark):
