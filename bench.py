@@ -265,9 +265,8 @@ def _headline(
         "glob_multi_star_pages",
         lambda: _force(extract_occurrences(pages, [GlobMiner("*i*k*")])),
     )
-    # simhash over the full pages table: JVM zero-shuffle projection engine
-    # (r3; the r2 Python-md5 kernel measures ~0.9 s here but pays the Arrow
-    # text transfer into Python workers the JVM engine avoids at scale)
+    # simhash over the full pages table: one zero-shuffle JVM projection
+    # (r3), no Arrow text transfer into Python workers
     from nativeextractor_spark.textops import simhash
 
     timed(
@@ -275,7 +274,6 @@ def _headline(
         lambda: _force(simhash(
             pages.select(F.col("url").alias("doc_id"), "text"),
             token_hash="xx64",
-            engine="project",
         )),
     )
     # corpus-curation ops over a lines-ified view of the full sf pages

@@ -18,13 +18,14 @@ Two classic pre-training cleanup stages:
 
 from __future__ import annotations
 
-from math import floor
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nativeextractor_spark.textops.quality import _doc_gopher_quality, _t6f
 
 # Gopher Table A1 thresholds
 _TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
@@ -51,13 +52,6 @@ _THRESHOLDS = [
     *[_TOP_NGRAM_MAX[n] for n in sorted(_TOP_NGRAM_MAX)],
     *[_DUP_NGRAM_MAX[n] for n in sorted(_DUP_NGRAM_MAX)],
 ]
-
-
-def _t6f(num: int, den: int) -> float:
-    """floor(num * 1e6 / den) / 1e6 with the DuckDB oracles' IEEE-double
-    operation order (num→double, *1e6, /den, floor, /1e6), so the
-    fractions are bit-equal to the oracle's."""
-    return floor(num * 1000000.0 / max(den, 1)) / 1000000
 
 
 def _doc_repetition_metrics(text, dup_span: bool) -> tuple:
@@ -155,66 +149,18 @@ def _doc_repetition_metrics(text, dup_span: bool) -> tuple:
     )
 
 
-_WS_ASCII = None  # lazy re.compile (keeps module import cheap)
-_ALPHA_RE = None
-_STOPWORDS = frozenset(
-    ["the", "be", "to", "of", "and", "that", "have", "with"]
-)
-
-
-def _doc_quality_pass(text) -> bool:
-    """Python replica of :func:`textops.quality.gopher_quality_filters`'s
-    ``gopher_pass`` — identical tokenization (ASCII ``\\s+`` split, the
-    same class Java's regex uses; empties kept) and identical IEEE-double
-    ratio comparisons, so the fused curation filter kernel (r8) computes
-    the same keep set the JVM operator does (the standalone operator and
-    its oracle query are unchanged)."""
-    global _WS_ASCII, _ALPHA_RE
-    if _WS_ASCII is None:
-        import re
-
-        _WS_ASCII = re.compile(r"\s+", re.ASCII)
-        _ALPHA_RE = re.compile(r"[a-zA-Z]")
-    if not isinstance(text, str):
-        text = ""
-    toks = _WS_ASCII.split(text.lower())
-    n_words = len(toks)
-    if not (50 <= n_words <= 100000):
-        return False
-    den = max(n_words, 1)
-    ciw = 0
-    n_sym = 0
-    n_alpha = 0
-    n_stop = 0
-    search = _ALPHA_RE.search
-    for t in toks:
-        ciw += len(t)
-        if "#" in t or "..." in t:
-            n_sym += 1
-        if search(t):
-            n_alpha += 1
-        if t in _STOPWORDS:
-            n_stop += 1
-    mean_wl = ciw / den
-    return (
-        3 <= mean_wl <= 10
-        and n_sym / den <= 0.1
-        and n_alpha / den >= 0.8
-        and n_stop >= 2
-    )
-
-
 def gopher_filter_keep_kernel(
     df: DataFrame, text_col: str, id_col: str, dup_flavor: str
 ) -> DataFrame:
     """(doc_id) rows passing BOTH the Gopher quality rules and the
     repetition rules — the curation pipeline's filter stage as ONE Arrow
     kernel pass (r8): one JVM↔Python crossing and one keep-join where the
-    r5-r7 pipeline ran a separate JVM quality scan, a repetition scan,
-    and an extra id join. Semantics identical by construction
-    (:func:`_doc_quality_pass` + :func:`_doc_repetition_metrics`); the
-    standalone operators and their oracle rows are untouched, and the
-    curate oracle replays both rule sets stage-by-stage."""
+    r5-r7 pipeline ran a separate quality scan, a repetition scan, and an
+    extra id join. It calls the same per-document functions as the
+    standalone operators (``quality._doc_gopher_quality`` and
+    :func:`_doc_repetition_metrics`), so the keep set is theirs by
+    construction; the curate oracle replays both rule sets
+    stage-by-stage."""
     from nativeextractor_spark.operators.extract import coalesce_for_kernel
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -224,7 +170,7 @@ def gopher_filter_keep_kernel(
         for pdf in batches:
             ids = []
             for doc_id, text in zip(pdf["doc_id"], pdf["_text"]):
-                if not _doc_quality_pass(text):
+                if not _doc_gopher_quality(text)[-1]:
                     continue
                 metrics = _doc_repetition_metrics(text, dup_span)
                 if all(m <= t for m, t in zip(metrics, _THRESHOLDS)):
@@ -330,7 +276,6 @@ def drop_duplicate_lines(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_line_chars: int = 1,
-    line_key: str = "hash",
 ) -> DataFrame:
     """C4-style corpus-wide line dedup: every line occurring more than once
     in the corpus survives ONLY at its first occurrence — min (doc_id,
@@ -355,17 +300,13 @@ def drop_duplicate_lines(
     per document ordered by position. The keeper rule makes the output
     deterministic and idempotent (running it twice removes nothing new).
 
-    ``line_key`` picks the dedup key (VERDICT r3 item 3, mirroring
-    minhash's ``word_hash`` flavor):
-
-    - ``"hash"`` (default) — key on ``xxhash64(line)``: the first-
-      occurrence aggregate shuffles 8-byte keys with NO string payload at
-      all, and the join compares longs instead of line text. A 64-bit
-      collision (~2^-64 per distinct-line pair) would merge two distinct
-      lines and drop one wrongly — the standard corpus-dedup trade.
-    - ``"string"`` — key on the raw line (collision-free; the flavor an
-      independent SQL engine can replay verbatim, used by the DuckDB
-      oracle). Output is identical absent hash collisions.
+    Lines are keyed on ``xxhash64(line)``: the first-occurrence aggregate
+    shuffles 8-byte keys with NO string payload at all, and the join
+    compares longs instead of line text. A 64-bit collision (~2^-64 per
+    distinct-line pair) would merge two distinct lines and drop one
+    wrongly — the standard corpus-dedup trade. The DuckDB oracle row
+    ``line_dedup`` keys on the raw line, so it pins the output up to such
+    collisions.
 
     Measured at sf0.1 (50k pages, ~1.1M 5-token lines, local[32]): the r4
     dup-only-build-side left join cut the r3 inner-join shape ~5.6 s →
@@ -374,8 +315,6 @@ def drop_duplicate_lines(
     grows with line length (real web lines are far longer than this
     fixture's ~30 chars).
     """
-    if line_key not in ("hash", "string"):
-        raise ValueError(f"line_key must be 'hash' or 'string', got {line_key!r}")
     from nativeextractor_spark.operators.extract import coalesce_for_kernel
 
     # the exploded line rows feed two groupBys and a join — merge tiny
@@ -386,12 +325,7 @@ def drop_duplicate_lines(
         F.posexplode(
             F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
         ).alias("pos", "line"),
-    )
-    if line_key == "hash":
-        rows = rows.withColumn("_lk", F.xxhash64("line"))
-        key = "_lk"
-    else:
-        key = "line"
+    ).withColumn("_lk", F.xxhash64("line"))
     exempt = F.length("line") < min_line_chars
     # only DUPLICATED keys enter the join build side: unique lines (the
     # overwhelming majority of a real corpus) and exempt lines surface as
@@ -400,14 +334,14 @@ def drop_duplicate_lines(
     # broadcast on mildly-duplicated corpora
     firsts = (
         rows.where(~exempt)
-        .groupBy(key)
+        .groupBy("_lk")
         .agg(F.min(F.struct("doc_id", "pos")).alias("_first"), F.count("*").alias("_cnt"))
         .where(F.col("_cnt") > 1)
         .drop("_cnt")
     )
-    # the explicit exempt disjunct is belt-and-braces under hash keys: an
-    # exempt line whose xxhash64 collides with a duplicated line's key
-    # would otherwise join a first-occurrence record and be dropped
+    # the explicit exempt disjunct is belt-and-braces: an exempt line
+    # whose xxhash64 collides with a duplicated line's key would otherwise
+    # join a first-occurrence record and be dropped
     keep_cond = (
         exempt
         | F.col("_first").isNull()
@@ -424,7 +358,7 @@ def drop_duplicate_lines(
     # them; plan: 3 corpus shuffles -> 2). Every doc has >= 1 line row
     # (split of '' is ['']), so no left join is needed to keep empty docs.
     return (
-        rows.join(firsts, key, "left")
+        rows.join(firsts, "_lk", "left")
         .groupBy("doc_id")
         .agg(
             F.array_join(

@@ -153,10 +153,8 @@ def curate_corpus(
         keep = None
         if quality_filter and repetition_filter:
             # r8: both rule sets in ONE Arrow kernel pass over the corpus
-            # (one boundary crossing, one keep-join) — semantics identical
-            # to the separate operators (same tokenization and IEEE ratio
-            # comparisons; the standalone operators and the stage-by-stage
-            # curate oracle are unchanged)
+            # (one boundary crossing, one keep-join); it calls the same
+            # per-document rule functions as the standalone operators
             from nativeextractor_spark.textops.lines import (
                 gopher_filter_keep_kernel,
             )

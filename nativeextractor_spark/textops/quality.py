@@ -1,10 +1,17 @@
 """Text analysis operators: language-ID, quality scoring, token counts,
-document fingerprinting. All JVM-side expressions (WSCG) except where noted —
-these run as full-corpus map passes at 100 TB, so no Python in the hot path.
+document fingerprinting. All JVM-side expressions (WSCG) except the Gopher
+quality rule (:func:`gopher_quality_filters`), which is one Python
+function run by an Arrow kernel so that the standalone operator and the
+curation pipeline's fused filter share a single implementation.
 """
 
 from __future__ import annotations
 
+import re
+from math import floor
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -147,57 +154,112 @@ def winnow_fingerprints(
     ).distinct()
 
 
+# Gopher quality rule: stopword list and the output columns of
+# _doc_gopher_quality, in order, with their Spark types
+_GOPHER_STOPWORDS = frozenset(
+    ["the", "be", "to", "of", "and", "that", "have", "with"]
+)
+_QUALITY_COLUMNS = [
+    ("n_words", "int"),
+    ("mean_word_len", "double"),
+    ("symbol_ratio", "double"),
+    ("alpha_word_ratio", "double"),
+    ("n_stopwords", "int"),
+    ("ok_word_count", "boolean"),
+    ("ok_mean_word_len", "boolean"),
+    ("ok_symbol_ratio", "boolean"),
+    ("ok_alpha_words", "boolean"),
+    ("ok_stopwords", "boolean"),
+    ("gopher_pass", "boolean"),
+]
+# nullable pandas dtypes, so a NULL document's row stays NULL through Arrow
+_PANDAS_DTYPES = {"int": "Int32", "double": "Float64", "boolean": "boolean"}
+_WS_ASCII = re.compile(r"\s+", re.ASCII)
+_ALPHA_RE = re.compile(r"[a-zA-Z]")
+
+
+def _t6f(num: int, den: int) -> float:
+    """floor(num * 1e6 / den) / 1e6 with the DuckDB oracles' IEEE-double
+    operation order (num→double, *1e6, /den, floor, /1e6), so the
+    fractions are bit-equal to the oracle's."""
+    return floor(num * 1000000.0 / max(den, 1)) / 1000000
+
+
+def _doc_gopher_quality(text) -> tuple:
+    """One document's Gopher quality metrics and flags, in
+    ``_QUALITY_COLUMNS`` order; all NULL for a NULL document.
+
+    Tokens are ``lower(text)`` split on ASCII ``\\s+`` with empties kept
+    (a leading separator yields a leading empty token, ``""`` is one empty
+    token); on single-spaced text this is the oracle's split on ``' '``.
+    Ratios are truncated with :func:`_t6f`; the flags compare the
+    untruncated IEEE-double ratios."""
+    if text is None:
+        return (None,) * len(_QUALITY_COLUMNS)
+    toks = _WS_ASCII.split(text.lower())
+    n_words = len(toks)
+    ciw = n_sym = n_alpha = n_stop = 0
+    search = _ALPHA_RE.search
+    for t in toks:
+        ciw += len(t)
+        if "#" in t or "..." in t:
+            n_sym += 1
+        if search(t):
+            n_alpha += 1
+        if t in _GOPHER_STOPWORDS:
+            n_stop += 1
+    ok_words = 50 <= n_words <= 100000
+    ok_mwl = 3 <= ciw / n_words <= 10
+    ok_sym = n_sym / n_words <= 0.1
+    ok_alpha = n_alpha / n_words >= 0.8
+    ok_stop = n_stop >= 2
+    return (
+        n_words,
+        _t6f(ciw, n_words),
+        _t6f(n_sym, n_words),
+        _t6f(n_alpha, n_words),
+        n_stop,
+        ok_words,
+        ok_mwl,
+        ok_sym,
+        ok_alpha,
+        ok_stop,
+        ok_words and ok_mwl and ok_sym and ok_alpha and ok_stop,
+    )
+
+
 def gopher_quality_filters(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, public) as
     boolean flags + overall pass — the standard pre-training web filter set.
-    Pure SQL expressions (whole-stage codegen).
 
     Rules: word count in [50, 100k]; mean word length in [3, 10]; symbol-
     to-word ratio (# or ellipsis) <= 0.1; >=80% of words contain an
     alphabetic char; >=2 common-English stopwords present.
+
+    Engine: one ``mapInPandas`` pass over :func:`_doc_gopher_quality`, the
+    only implementation of the rule — the curation pipeline's fused filter
+    kernel (``textops.lines.gopher_filter_keep_kernel``) calls the same
+    function. The DuckDB oracle row ``gopher_filters`` pins it. Returns
+    one row per input row: (doc_id, metrics, flags, ``gopher_pass``).
     """
-    toks = _tokens(text_col)
-    n_words = F.size(toks)
-    n_chars_in_words = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
-    )
-    mean_wl = n_chars_in_words / F.greatest(n_words, F.lit(1))
-    n_symbols = F.size(
-        F.filter(toks, lambda t: t.contains("#") | t.contains("..."))
-    )
-    sym_ratio = n_symbols / F.greatest(n_words, F.lit(1))
-    n_alpha = F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]")))
-    alpha_ratio = n_alpha / F.greatest(n_words, F.lit(1))
-    stops = F.array(
-        *[F.lit(w) for w in ["the", "be", "to", "of", "and", "that", "have", "with"]]
-    )
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
+    from nativeextractor_spark.operators.extract import coalesce_for_kernel
 
-    def t6_ratio(num, den):
-        # floor(num * 1e6 / den): the SAME association the DuckDB oracle
-        # uses — floor((num/den) * 1e6) can differ by one ulp at floor
-        # boundaries, so both sides must associate identically
-        return F.floor(num * 1000000.0 / den) / 1000000
-
-    den = F.greatest(n_words, F.lit(1))
-    ok_words = (n_words >= 50) & (n_words <= 100000)
-    ok_mwl = (mean_wl >= 3) & (mean_wl <= 10)
-    ok_sym = sym_ratio <= 0.1
-    ok_alpha = alpha_ratio >= 0.8
-    ok_stop = n_stop >= 2
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        n_words.alias("n_words"),
-        t6_ratio(n_chars_in_words, den).alias("mean_word_len"),
-        t6_ratio(n_symbols, den).alias("symbol_ratio"),
-        t6_ratio(n_alpha, den).alias("alpha_word_ratio"),
-        n_stop.alias("n_stopwords"),
-        ok_words.alias("ok_word_count"),
-        ok_mwl.alias("ok_mean_word_len"),
-        ok_sym.alias("ok_symbol_ratio"),
-        ok_alpha.alias("ok_alpha_words"),
-        ok_stop.alias("ok_stopwords"),
-        (ok_words & ok_mwl & ok_sym & ok_alpha & ok_stop).alias("gopher_pass"),
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = f"doc_id {id_type}, " + ", ".join(
+        f"{name} {typ}" for name, typ in _QUALITY_COLUMNS
     )
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [_doc_gopher_quality(t) for t in pdf["_text"]]
+            cols = zip(*rows) if rows else [()] * len(_QUALITY_COLUMNS)
+            data = {"doc_id": pdf["doc_id"]}
+            for (name, typ), vals in zip(_QUALITY_COLUMNS, cols):
+                data[name] = pd.array(list(vals), dtype=_PANDAS_DTYPES[typ])
+            yield pd.DataFrame(data)
+
+    return coalesce_for_kernel(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+    ).mapInPandas(kernel, schema=schema)

@@ -376,6 +376,11 @@ def _assign_cells_arrow(
     return df.mapInPandas(gen, schema)
 
 
+# largest codebook cosine_topk_ivf assigns through plan literals; bigger
+# codebooks go through the Arrow matmul kernel
+_LITERAL_ASSIGN_MAX_CENTROIDS = 64
+
+
 def cosine_topk_ivf(
     vectors: DataFrame,
     queries: DataFrame,
@@ -386,7 +391,6 @@ def cosine_topk_ivf(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     codebook="seed",
-    assign_engine: str = "auto",
     train_sample: int = 4096,
 ) -> DataFrame:
     """Approximate top-k via IVF coarse quantization: assign every vector to
@@ -407,13 +411,13 @@ def cosine_topk_ivf(
     centroids, see queries.py); or an explicit list of centroid vectors.
     Returns (query_id, vec_id, cosine, rank).
 
-    ``assign_engine`` picks how rows meet the codebook: ``"literal"`` =
-    the shuffle-free plan-literal projection above (the contract/oracle
-    path; the expression tree carries k×dim literals, viable to a few
-    hundred centroids); ``"kernel"`` = :func:`_assign_cells_arrow`
-    (Arrow-batched NumPy matmul, the scale path — a 100k/1000-cluster
-    corpus needs ~1000 cells, far past what plan literals can carry);
-    ``"auto"`` (default) = kernel when the codebook exceeds 64 centroids.
+    How rows meet the codebook depends on its size: up to
+    :data:`_LITERAL_ASSIGN_MAX_CENTROIDS` centroids, the shuffle-free
+    plan-literal projection above (the contract/oracle path; the
+    expression tree carries k×dim literals); above it,
+    :func:`_assign_cells_arrow` (Arrow-batched NumPy matmul, the scale
+    path — a 100k/1000-cluster corpus needs ~1000 cells, far past what
+    plan literals can carry).
     ``train_sample`` sizes the ``"kmeans"`` training sample — keep it a
     few × n_centroids (the default 4096 is thin for 1000+ cells).
     """
@@ -434,14 +438,7 @@ def cosine_topk_ivf(
         )
     else:
         cents = list(enumerate(codebook))
-    if assign_engine not in ("auto", "literal", "kernel"):
-        raise ValueError(
-            f"assign_engine must be 'auto', 'literal' or 'kernel', "
-            f"got {assign_engine!r}"
-        )
-    use_kernel = assign_engine == "kernel" or (
-        assign_engine == "auto" and len(cents) > 64
-    )
+    use_kernel = len(cents) > _LITERAL_ASSIGN_MAX_CENTROIDS
 
     v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
     q = queries.select(

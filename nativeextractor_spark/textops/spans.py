@@ -32,9 +32,11 @@ slice-sums over the token-length array (O(tokens) per doc, no prefix-sum
 array, no window, no offset join).
 
 Scale shape: the global count aggregate shuffles 8-byte xxhash64 gram
-keys (``gram_key="hash"``, default; ``"string"`` for oracle replay), the
-join build side holds duplicated grams only, and everything else is a
-per-doc projection or a dup-only-volume aggregate — no Python anywhere.
+keys (an xxhash64 combine of the n member token hashes; the DuckDB oracle
+rows ``dup_span_stats``/``dup_span_removal`` key on the gram text and so
+pin the output up to 64-bit collisions), the join build side holds
+duplicated grams only, and everything else is a per-doc projection or a
+dup-only-volume aggregate — no Python anywhere.
 Above :data:`_TWO_PHASE_MIN_BYTES` of token data the count runs in two
 phases (see :func:`_eligible_starts`).
 """
@@ -74,49 +76,33 @@ def _base_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).withColumn("_tlens", F.expr("transform(_toks, t -> length(t))"))
 
 
-def _occ_token_index(base: DataFrame, n: int, gram_key: str) -> DataFrame:
+def _occ_token_index(base: DataFrame, n: int) -> DataFrame:
     """(doc_id, gk, i): one row per n-gram occurrence, ``i`` the 1-based
     start-token index. The sequence pads to >= 1 entry even when the doc
     has no n-grams (``sequence(1, 0)`` would count DOWN); the outer slice
     trims the pad.
 
-    ``gram_key="hash"`` (r8): gram identity is an xxhash64 COMBINE of the
-    n member token hashes (each token hashed once per doc) — the
-    ``word_hash`` trick from textops.dedup — instead of the r7
-    ``xxhash64(slice(_toks, i, n))``, which re-hashed n strings and
-    allocated a slice per gram (~n times the hash work per gram at
-    corpus volume). The key's VALUE changes, but gk never leaves this
-    computation (the global count and the eligibility join both consume
-    this frame), so output changes only under 64-bit collisions — the
-    same tolerance class as before, and the string flavor stays the
-    collision-free oracle path."""
-    if gram_key == "hash":
-        combine = ", ".join(f"try_element_at(_th, i + {j})" for j in range(n))
-        arr = (
-            f"slice(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-            f" i -> struct(xxhash64({combine}) AS gk, i AS i)),"
-            f" 1, greatest(size(_toks) - {n - 1}, 0))"
-        )
-        return (
-            base.withColumn("_th", F.expr("transform(_toks, t -> xxhash64(t))"))
-            .select("doc_id", F.explode(F.expr(arr)).alias("_g"))
-            .select(
-                "doc_id", F.col("_g.gk").alias("gk"), F.col("_g.i").alias("i")
-            )
-        )
+    Gram identity ``gk`` (r8) is an xxhash64 COMBINE of the n member
+    token hashes (each token hashed once per doc) — the ``word_hash``
+    trick from textops.dedup — instead of ``xxhash64(slice(_toks, i, n))``,
+    which re-hashed n strings and allocated a slice per gram (~n times the
+    hash work per gram at corpus volume). gk never leaves this computation
+    (the global count and the eligibility join both consume this frame),
+    so its value matters only through 64-bit collisions."""
+    combine = ", ".join(f"try_element_at(_th, i + {j})" for j in range(n))
     arr = (
         f"slice(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-        f" i -> struct(array_join(slice(_toks, i, {n}), ' ') AS gk, i AS i)),"
+        f" i -> struct(xxhash64({combine}) AS gk, i AS i)),"
         f" 1, greatest(size(_toks) - {n - 1}, 0))"
     )
-    return base.select("doc_id", F.explode(F.expr(arr)).alias("_g")).select(
-        "doc_id", F.col("_g.gk").alias("gk"), F.col("_g.i").alias("i")
+    return (
+        base.withColumn("_th", F.expr("transform(_toks, t -> xxhash64(t))"))
+        .select("doc_id", F.explode(F.expr(arr)).alias("_g"))
+        .select("doc_id", F.col("_g.gk").alias("gk"), F.col("_g.i").alias("i"))
     )
 
 
-def _eligible_starts(
-    base: DataFrame, n_tokens: int, keep: str, gram_key: str
-) -> DataFrame:
+def _eligible_starts(base: DataFrame, n_tokens: int, keep: str) -> DataFrame:
     """(doc_id, i) removal-eligible occurrence start tokens: global
     duplicate determination in token space (min (doc_id, i) is the
     global first — within a doc the char offset is strictly increasing
@@ -137,7 +123,7 @@ def _eligible_starts(
     """
     from nativeextractor_spark.staging import stage
 
-    occ = _occ_token_index(base, n_tokens, gram_key)
+    occ = _occ_token_index(base, n_tokens)
     try:
         base_bytes = int(
             base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -237,7 +223,6 @@ def duplicate_spans(
     id_col: str = "doc_id",
     n_tokens: int = 8,
     keep: str = "first",
-    gram_key: str = "hash",
     assume_unique: bool = False,
 ) -> DataFrame:
     """Per-document maximal duplicate spans: (doc_id, span_s, span_e),
@@ -248,12 +233,10 @@ def duplicate_spans(
     shuffle when the caller guarantees uniqueness."""
     if keep not in ("first", "none"):
         raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
-    if gram_key not in ("hash", "string"):
-        raise ValueError(f"gram_key must be 'hash' or 'string', got {gram_key!r}")
     if not assume_unique:
         df = collapse_ids(df, text_col, id_col)
     base = _base_tokens(df, text_col, id_col)
-    elig = _eligible_starts(base, n_tokens, keep, gram_key)
+    elig = _eligible_starts(base, n_tokens, keep)
     merged = (
         elig.groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("i")).alias("_is"))
@@ -278,7 +261,6 @@ def duplicate_span_stats(
     id_col: str = "doc_id",
     n_tokens: int = 8,
     keep: str = "first",
-    gram_key: str = "hash",
     assume_unique: bool = False,
 ) -> DataFrame:
     """(doc_id, n_chars, n_dup_spans, dup_span_chars, dup_span_frac) for
@@ -288,7 +270,7 @@ def duplicate_span_stats(
     if not assume_unique:
         df = collapse_ids(df, text_col, id_col)
     spans = duplicate_spans(
-        df, text_col, id_col, n_tokens, keep, gram_key, assume_unique=True
+        df, text_col, id_col, n_tokens, keep, assume_unique=True
     )
     per_doc = spans.groupBy("doc_id").agg(
         F.count("*").alias("n_dup_spans"),
@@ -322,7 +304,6 @@ def remove_duplicate_spans(
     id_col: str = "doc_id",
     n_tokens: int = 8,
     keep: str = "first",
-    gram_key: str = "hash",
     assume_unique: bool = False,
 ) -> DataFrame:
     """(doc_id, text, n_removed_chars): documents with their duplicate
@@ -334,7 +315,7 @@ def remove_duplicate_spans(
     if not assume_unique:
         df = collapse_ids(df, text_col, id_col)
     spans = duplicate_spans(
-        df, text_col, id_col, n_tokens, keep, gram_key, assume_unique=True
+        df, text_col, id_col, n_tokens, keep, assume_unique=True
     )
     agg = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("span_s", "span_e"))).alias(

@@ -129,17 +129,20 @@ def test_ivf_recall_at_30k(spark, ann_corpus):
     assert r_wide >= 0.8, (r_narrow, r_wide)
 
 
-def test_ivf_kernel_engine_matches_literal(spark, ann_corpus):
+def test_ivf_kernel_engine_matches_literal(spark, ann_corpus, monkeypatch):
     """The Arrow-kernel cell assignment (scale path for large codebooks)
     returns the same top-k as the plan-literal engine on the same trained
-    codebook — same cells, same probes, same re-rank."""
+    codebook — same cells, same probes, same re-rank. The 64-cell book
+    runs the literal engine; a zero threshold sends it to the kernel."""
+    from nativeextractor_spark.textops import similarity
     from nativeextractor_spark.textops.similarity import cosine_topk_ivf
 
     emb, queries, exact, n_exact = ann_corpus
     kw = dict(k=K, n_centroids=64, nprobe=4, codebook="kmeans")
-    lit = cosine_topk_ivf(emb, queries, assign_engine="literal", **kw)
-    ker = cosine_topk_ivf(emb, queries, assign_engine="kernel", **kw)
-    assert sorted(map(tuple, lit.collect())) == sorted(map(tuple, ker.collect()))
+    lit = sorted(map(tuple, cosine_topk_ivf(emb, queries, **kw).collect()))
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_CENTROIDS", 0)
+    ker = sorted(map(tuple, cosine_topk_ivf(emb, queries, **kw).collect()))
+    assert lit == ker
 
 
 def test_ivf_kernel_recall_with_cluster_matched_codebook(spark, ann_corpus):
@@ -215,7 +218,7 @@ def test_ivf_recall_1m_tier(spark):
     }
     got = cosine_topk_ivf(
         emb, queries, k=K, n_centroids=1024, nprobe=8,
-        codebook="kmeans", assign_engine="kernel", train_sample=16384,
+        codebook="kmeans", train_sample=16384,
     )
     by_q = {}
     for r in got.collect():

@@ -129,14 +129,17 @@ def test_ivf_assignment_is_shuffle_free(spark):
             assert "query_id" in line, f"unexpected corpus-side exchange: {line}"
 
 
-def test_ivf_kernel_engine_plan_shape(spark):
+def test_ivf_kernel_engine_plan_shape(spark, monkeypatch):
     """The Arrow-kernel assignment (r6 scale path for 1000+-cell
     codebooks) must keep the same scale shape as the literal engine: the
     corpus flows through ONE MapInPandas (no per-row Python), the probe
     join broadcasts, and the only corpus-side exchange is the final
     per-query rank."""
+    from nativeextractor_spark.textops import similarity
     from nativeextractor_spark.textops.similarity import cosine_topk_ivf
 
+    # a 4-cell book takes the kernel only below the literal threshold
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_CENTROIDS", 0)
     vecs = spark.createDataFrame(
         [(i, [float((i * 7 + j) % 13) for j in range(8)]) for i in range(40)],
         "vec_id long, embedding array<float>",
@@ -144,9 +147,7 @@ def test_ivf_kernel_engine_plan_shape(spark):
     queries = vecs.where("vec_id < 2").selectExpr(
         "vec_id as query_id", "embedding"
     )
-    df = cosine_topk_ivf(
-        vecs, queries, k=3, n_centroids=4, nprobe=2, assign_engine="kernel"
-    )
+    df = cosine_topk_ivf(vecs, queries, k=3, n_centroids=4, nprobe=2)
     plan = _plan(df)
     assert "MapInPandas" in plan, plan
     assert "BatchEvalPython" not in plan, plan  # no row-at-a-time Python

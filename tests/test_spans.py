@@ -54,14 +54,13 @@ def _random_docs():
     return docs
 
 
-@pytest.mark.parametrize("gram_key", ["hash", "string"])
-def test_span_operators_match_duckdb_oracle_randomized(spark, oracle_replay, gram_key):
+def test_span_operators_match_duckdb_oracle_randomized(spark, oracle_replay):
     """duplicate_span_stats and remove_duplicate_spans equal the
     dup_span_stats / dup_span_removal contract oracles on a randomized
-    corpus, under both gram keys."""
+    corpus."""
     docs = _random_docs()
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    kw = dict(n_tokens=_DUP_SPAN_N, gram_key=gram_key)
+    kw = dict(n_tokens=_DUP_SPAN_N)
     got, want = oracle_replay(duplicate_span_stats(df, **kw), O_DUP_SPAN_STATS, docs)
     assert got == want
     got, want = oracle_replay(
@@ -72,15 +71,13 @@ def test_span_operators_match_duckdb_oracle_randomized(spark, oracle_replay, gra
 
 # 1 << 80 lies above even the size estimate of an in-memory frame, whose
 # unknown stats (>= 2^63 - 1) otherwise resolve to the two-phase shape
-@pytest.mark.parametrize("gram_key", ["hash", "string"])
 @pytest.mark.parametrize("min_bytes", [0, 1 << 80], ids=["two_phase", "one_phase"])
 def test_span_two_phase_gate_both_shapes_match_oracle(
-    spark, oracle_replay, monkeypatch, min_bytes, gram_key
+    spark, oracle_replay, monkeypatch, min_bytes
 ):
     """Both sides of the size gate in _eligible_starts — the two-phase
     count (staged dup-only slice) at threshold 0 and the single combined
-    aggregate at a huge threshold — give the oracle's output, under both
-    gram keys."""
+    aggregate at a huge threshold — give the oracle's output."""
     from nativeextractor_spark import staging
 
     monkeypatch.setattr(spans, "_TWO_PHASE_MIN_BYTES", min_bytes)
@@ -89,7 +86,7 @@ def test_span_two_phase_gate_both_shapes_match_oracle(
     monkeypatch.setattr(staging, "stage", lambda tag: tags.append(tag) or real_stage(tag))
     docs = _random_docs()
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    kw = dict(n_tokens=_DUP_SPAN_N, gram_key=gram_key)
+    kw = dict(n_tokens=_DUP_SPAN_N)
     got, want = oracle_replay(duplicate_span_stats(df, **kw), O_DUP_SPAN_STATS, docs)
     assert got == want
     got, want = oracle_replay(

@@ -62,11 +62,12 @@ def test_lsh_xx64_flavor(spark, docs):
 
 
 def test_lsh_word_shingles(spark, docs):
-    """Corpus-scale flavor: word 3-shingles find exact dups and the near-dup
-    (shares most word trigrams), and reject the unrelated doc."""
+    """Corpus-scale flavor: word 3-shingles (token-hash combines) find exact
+    dups and the near-dup (shares most word trigrams), and reject the
+    unrelated doc."""
     pairs = lsh_duplicate_pairs(
         docs, num_hashes=6, k=3, min_shared_bands=3,
-        hash_flavor="xx64", shingle="word",
+        hash_flavor="xx64", shingle="word_hash",
     ).collect()
     got = {(p.doc_a, p.doc_b) for p in pairs}
     assert (0, 1) in got
@@ -75,6 +76,8 @@ def test_lsh_word_shingles(spark, docs):
 
     with _pt.raises(ValueError):
         lsh_duplicate_pairs(docs, shingle="sentence")
+    with _pt.raises(ValueError):
+        lsh_duplicate_pairs(docs, hash_flavor="xx64", shingle="word")
 
 
 def test_ngram_jaccard(spark, docs):
@@ -193,7 +196,9 @@ def test_word_shingles_whitespace_invariant(spark):
         ],
         "doc_id long, text string",
     )
-    rows = minhash_bands(variants, shingle="word", k=3).collect()
+    rows = minhash_bands(
+        variants, hash_flavor="xx64", shingle="word_hash", k=3
+    ).collect()
     sig = {}
     for r in rows:
         sig.setdefault(r.doc_id, {})[r.band] = r.min_hash
@@ -293,30 +298,79 @@ def test_gopher_filters_rules(spark):
     assert all(not out[i].gopher_pass for i in (1, 2, 3, 4))
 
 
-def test_simhash_engines_bit_identical(spark):
-    """All three simhash engines (JVM projection, JVM explode+agg, NumPy
-    kernel) must produce bit-identical signatures, including null/empty/
-    whitespace-only docs and case-folded duplicate tokens."""
+# gopher_quality_filters on edge rows, recorded from the earlier
+# JVM-expression implementation of the rule: (n_words, mean_word_len, symbol_ratio, alpha_word_ratio,
+# n_stopwords, ok_word_count, ok_mean_word_len, ok_symbol_ratio,
+# ok_alpha_words, ok_stopwords, gopher_pass)
+_GOPHER_QUALITY_GOLDEN = [
+    (None, (None,) * 11),
+    ("", (1, 0.0, 0.0, 0.0, 0, False, False, True, False, False, False)),
+    ("   ", (2, 0.0, 0.0, 0.0, 0, False, False, True, False, False, False)),
+    # a leading separator yields a leading empty token
+    (" the cat", (3, 2.0, 0.0, 0.666666, 1, False, False, True, False, False, False)),
+    # tab, newline, CR and space runs all separate; trailing empty token
+    ("\tthe\ncat  of\r\nx ",
+     (6, 1.5, 0.0, 0.666666, 2, False, False, True, False, True, False)),
+    # vertical tab and form feed are ASCII whitespace
+    ("a\x0bb\x0cc", (3, 1.0, 0.0, 1.0, 0, False, False, True, True, False, False)),
+    ("The OF ## x... Q", (5, 2.4, 0.4, 0.8, 2, False, False, False, True, True, False)),
+    # U+00A0 is not a separator
+    ("the\xa0cat of", (2, 4.5, 0.0, 1.0, 1, False, True, True, True, False, False)),
+    ("\u0158E\u010c the of",
+     (3, 2.666666, 0.0, 1.0, 2, False, False, True, True, True, False)),
+]
+
+
+def test_gopher_quality_filters_edge_rows_golden(spark):
+    """NULL, empty, whitespace-only, leading-space, mixed-separator,
+    non-breaking-space and multibyte docs give the recorded metrics and
+    flags, and the Spark column types stay int/double/boolean."""
+    from nativeextractor_spark.textops.quality import gopher_quality_filters
+
     df = spark.createDataFrame(
-        [
-            (1, None),
-            (2, ""),
-            (3, "   "),
-            (4, "The THE the"),
-            (5, "alpha beta gamma delta alpha"),
-            (6, "x\ty\nz"),
-            (7, "lorem ipsum dolor sit amet " * 20),
-        ],
+        [(i, t) for i, (t, _) in enumerate(_GOPHER_QUALITY_GOLDEN)],
         "doc_id long, text string",
     )
-    out = {}
-    for eng in ["project", "agg", "kernel"]:
-        from nativeextractor_spark.textops.dedup import simhash
+    out = gopher_quality_filters(df)
+    assert out.schema.simpleString() == (
+        "struct<doc_id:bigint,n_words:int,mean_word_len:double,"
+        "symbol_ratio:double,alpha_word_ratio:double,n_stopwords:int,"
+        "ok_word_count:boolean,ok_mean_word_len:boolean,"
+        "ok_symbol_ratio:boolean,ok_alpha_words:boolean,"
+        "ok_stopwords:boolean,gopher_pass:boolean>"
+    )
+    got = {r[0]: tuple(r[1:]) for r in out.collect()}
+    want = {i: w for i, (_, w) in enumerate(_GOPHER_QUALITY_GOLDEN)}
+    assert got == want
 
-        out[eng] = {r.doc_id: r.simhash for r in simhash(df, engine=eng).collect()}
-    assert out["project"] == out["kernel"]
-    assert out["agg"] == out["kernel"]
-    assert out["kernel"][1] == 0 and out["kernel"][2] == 0 and out["kernel"][3] == 0
+
+def test_simhash_matches_duckdb_oracle_randomized(spark, oracle_replay):
+    """simhash equals the simhash contract oracle replayed over random
+    non-empty single-spaced docs (ids < 100, the oracle's filter),
+    including case-folded duplicate tokens. Docs without tokens get 0 and
+    every whitespace class separates tokens; the oracle splits on single
+    spaces only, so those rows are checked literally."""
+    import random
+
+    from nativeextractor_spark.queries import O_SIMHASH
+
+    rng = random.Random(5)
+    vocab = ["the", "The", "THE", "alpha", "beta", "gamma", "ř", "x1", "q"]
+    docs = [(0, "The THE the"), (1, "alpha beta gamma delta alpha")]
+    for i in range(2, 92):
+        n = rng.randrange(1, 40)
+        docs.append((i, " ".join(rng.choice(vocab) for _ in range(n))))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got, want = oracle_replay(simhash(df), O_SIMHASH, docs)
+    assert got == want
+
+    edge = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "x\ty\nz"), (5, "x y z")],
+        "doc_id long, text string",
+    )
+    sig = {r.doc_id: r.simhash for r in simhash(edge).collect()}
+    assert sig[1] == 0 and sig[2] == 0 and sig[3] == 0
+    assert sig[4] == sig[5] != 0
 
 
 def test_embedding_dup_pairs_multiband_recall(spark):
@@ -680,16 +734,8 @@ def test_duplicate_spans_keep_first_and_idempotent(spark):
         for r in remove_duplicate_spans(df, n_tokens=4, keep="none").collect()
     }
     assert none[1].n_removed_chars == 46 and none[5].n_removed_chars == 46
-    # gram keys agree
-    h = sorted(map(tuple, duplicate_span_stats(df, n_tokens=4).collect()))
-    s = sorted(
-        map(tuple, duplicate_span_stats(df, n_tokens=4, gram_key="string").collect())
-    )
-    assert h == s
     with pytest.raises(ValueError):
         duplicate_span_stats(df, keep="nope")
-    with pytest.raises(ValueError):
-        duplicate_span_stats(df, gram_key="nope")
 
 
 def test_duplicate_spans_duplicate_ids_collapse(spark):
@@ -767,29 +813,29 @@ def test_gopher_repetition_span_flavor(spark):
     assert tuple(one) == tuple(ref)
 
 
-def test_drop_duplicate_lines_hash_vs_string_flavor(spark):
-    """The 8-byte-key shuffle flavor (default) and the raw-string flavor
-    (oracle-replayable) agree row-for-row; the hash flavor's plan carries
+def test_drop_duplicate_lines_matches_duckdb_oracle(spark, oracle_replay):
+    """drop_duplicate_lines (xxhash64 line keys) equals the line_dedup
+    contract oracle (raw-string keys) replayed over a corpus with
+    repeated headers, repeated bodies, None and "" docs; the plan carries
     xxhash64 keys."""
+    from nativeextractor_spark.queries import _DOCS_WITH_LINES_SQL, O_LINE_DEDUP
     from nativeextractor_spark.textops.lines import drop_duplicate_lines
 
-    df = spark.createDataFrame(
-        [(i, f"hdr\nbody {i % 7}\nhdr\ntail {i}") for i in range(40)]
-        + [(100, None), (101, "")],
-        "doc_id long, text string",
+    sql = O_LINE_DEDUP.replace(
+        _DOCS_WITH_LINES_SQL,
+        "d AS (SELECT doc_id, coalesce(text, '') AS text FROM documents)",
     )
-    h = sorted(map(tuple, drop_duplicate_lines(df, line_key="hash").collect()))
-    s = sorted(map(tuple, drop_duplicate_lines(df, line_key="string").collect()))
-    assert h == s
-    plan = (
-        drop_duplicate_lines(df, line_key="hash")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    assert sql != O_LINE_DEDUP
+    docs = [(i, f"hdr\nbody {i % 7}\nhdr\ntail {i}") for i in range(40)] + [
+        (100, None),
+        (101, ""),
+        (102, "hdr\n\nhdr\n\nbody 3"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got, want = oracle_replay(drop_duplicate_lines(df), sql, docs)
+    assert got == want
+    plan = drop_duplicate_lines(df)._jdf.queryExecution().executedPlan().toString()
     assert "xxhash64" in plan
-    with pytest.raises(ValueError):
-        drop_duplicate_lines(df, line_key="nope")
 
 
 def test_redact_pii_spans_and_nulls(spark):
@@ -879,27 +925,6 @@ def test_drop_duplicate_lines_blank_exempt_and_null(spark):
     assert out[1].text == "p1\n\np2" and out[1].n_removed == 0
     assert out[2].text == "q1\n\nq2" and out[2].n_removed == 0
     assert 3 in out and out[3].n_removed == 0
-
-
-def test_ngram_jaccard_hash_key_matches_string_key(spark):
-    """The hash gram-key flavor must produce the same pairs and jaccard
-    values as the string flavor (equal up to 2^-64 hash collisions)."""
-    from nativeextractor_spark.textops import ngram_jaccard_pairs
-
-    rows = [
-        (i, " ".join(f"tok{(i * 3 + j) % 25}" for j in range(30)))
-        for i in range(12)
-    ] + [(100, " ".join(f"tok{j % 25}" for j in range(30)))]  # dup of doc 0
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.3).collect()
-    }
-    b = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.3, gram_key="hash").collect()
-    }
-    assert a == b and (0, 100) in a
 
 
 def test_curate_corpus_end_to_end(spark):
@@ -1126,35 +1151,83 @@ def test_curate_corpus_default_verifies_borderline_chain(spark):
     assert len(got_raw) < 4, got_raw
 
 
-def test_fused_filter_kernel_matches_separate_operators(spark):
-    """r8: the curation pipeline's fused quality+repetition keep kernel
-    must select EXACTLY the ids that pass gopher_quality_filters AND
-    gopher_repetition, across randomized docs including boundary word
-    counts, symbol-heavy tokens, stopword-poor texts, repeats, and
-    empty/null rows — for both dup flavors."""
+def _random_quality_docs():
+    """Random single-spaced docs around every Gopher quality bound (word
+    counts 49/50/51, symbol-, digit- and stopword-rich mixes, upper case,
+    multibyte words, planted repeats) plus None and ""."""
     import random
 
+    rng = random.Random(31)
+    words = ["alpha", "beta", "Gamma", "delta", "réé", "omega"]
+    odd = ["##", "x...", "12", "q", "a#b"]
+    stops = ["the", "be", "to", "of", "and", "that", "have", "with", "The"]
+    docs = [
+        (0, None),
+        (1, ""),
+        (2, "the of " + " ".join(["word"] * 48)),
+        # each ratio exactly at its bound: symbols 0.1, alpha words 0.8,
+        # mean word length 3 and 10
+        (3, " ".join(["the", "of"] + ["alpha"] * 43 + ["##"] * 5)),
+        (4, " ".join(["the", "of"] + ["alpha"] * 38 + ["12"] * 10)),
+        (5, " ".join(["the", "and"] + ["abc"] * 48)),
+        (6, " ".join(["the", "and"] + ["abcdefghij"] * 46 + ["abcdefghijklmnopq"] * 2)),
+    ]
+    for i in range(90):
+        n = rng.choice([5, 49, 50, 51, 80, 120])
+        p_odd = rng.choice([0.0, 0.05, 0.3])
+        p_stop = rng.choice([0.0, 0.2])
+        toks = []
+        for _ in range(n):
+            r = rng.random()
+            pool = odd if r < p_odd else stops if r < p_odd + p_stop else words
+            toks.append(rng.choice(pool))
+        if rng.random() < 0.5 and n > 10:  # planted repetition
+            toks += toks[:5] * rng.randrange(1, 4)
+        docs.append((10 + i, " ".join(toks)))
+    return docs
+
+
+def test_gopher_quality_filters_match_duckdb_oracle_randomized(
+    spark, oracle_replay
+):
+    """gopher_quality_filters equals the gopher_filters contract oracle
+    replayed over random single-spaced docs; both passing and failing
+    docs occur."""
+    from nativeextractor_spark.queries import O_GOPHER_FILTERS
+    from nativeextractor_spark.textops.quality import gopher_quality_filters
+
+    docs = _random_quality_docs()
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got, want = oracle_replay(gopher_quality_filters(df), O_GOPHER_FILTERS, docs)
+    assert got == want
+    rows, cols = want
+    passes = [r[cols.index("gopher_pass")] for r in rows]
+    assert passes.count("True") >= 5 and passes.count("False") >= 5, passes
+
+
+def test_fused_filter_kernel_matches_separate_operators(spark, oracle_replay):
+    """r8: the curation pipeline's fused quality+repetition keep kernel
+    must select EXACTLY the ids that pass the gopher_filters oracle AND
+    gopher_repetition, across randomized single-spaced docs including
+    boundary word counts, symbol-heavy tokens, stopword-poor texts,
+    repeats, and empty/null rows — for both dup flavors."""
+    from nativeextractor_spark.queries import O_GOPHER_FILTERS
     from nativeextractor_spark.textops.lines import (
         gopher_filter_keep_kernel,
         gopher_repetition,
     )
     from nativeextractor_spark.textops.quality import gopher_quality_filters
 
-    rng = random.Random(31)
-    stops = ["the", "be", "to", "of", "and", "that", "have", "with"]
-    vocab = ["alpha", "beta", "##", "x...", "12", "q", "réé"] + stops
-    rows = [(0, None), (1, ""), (2, "the of " + "word " * 48)]
-    for i in range(50):
-        n = rng.choice([5, 49, 50, 51, 80, 120])
-        toks = [vocab[rng.randrange(len(vocab))] for _ in range(n)]
-        if rng.random() < 0.5 and n > 10:  # planted repetition
-            seg = toks[:5]
-            toks += seg * rng.randrange(1, 4)
-        text = " ".join(toks)
-        if rng.random() < 0.3:
-            text = text.replace(" ", "\n", 3)
-        rows.append((10 + i, text))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = _random_quality_docs()
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    _, (rows, cols) = oracle_replay(
+        gopher_quality_filters(df), O_GOPHER_FILTERS, docs
+    )
+    q = {
+        int(r[cols.index("doc_id")])
+        for r in rows
+        if r[cols.index("gopher_pass")] == "True"
+    }
     for flavor in ("count", "span"):
         fused = sorted(
             r.doc_id
@@ -1162,11 +1235,6 @@ def test_fused_filter_kernel_matches_separate_operators(spark):
                 df, "text", "doc_id", flavor
             ).collect()
         )
-        q = {
-            r.doc_id
-            for r in gopher_quality_filters(df).collect()
-            if r.gopher_pass
-        }
         rep = {
             r.doc_id
             for r in gopher_repetition(
@@ -1175,3 +1243,43 @@ def test_fused_filter_kernel_matches_separate_operators(spark):
             if r.repetition_pass
         }
         assert fused == sorted(q & rep), flavor
+        assert fused, flavor
+
+
+@pytest.mark.parametrize(
+    "quality_filter, repetition_filter",
+    [(True, False), (False, True)],
+    ids=["quality_only", "repetition_only"],
+)
+def test_curate_corpus_single_filter_branch(
+    spark, quality_filter, repetition_filter
+):
+    """With exactly one Gopher rule set on (jobs/curate.py --no-quality /
+    --no-repetition), curate_corpus keeps exactly the ids that rule's
+    standalone operator passes, and after_filters counts them."""
+    from nativeextractor_spark.textops.lines import gopher_repetition
+    from nativeextractor_spark.textops.pipeline import curate_corpus
+    from nativeextractor_spark.textops.quality import gopher_quality_filters
+
+    docs = [(f"u{i:03d}", t) for i, t in _random_quality_docs()]
+    df = spark.createDataFrame(docs, "url string, text string")
+    out, metrics = curate_corpus(
+        df,
+        quality_filter=quality_filter,
+        repetition_filter=repetition_filter,
+        exact_dedup=False,
+        line_dedup=False,
+        near_dedup=False,
+        redact=False,
+    )
+    if quality_filter:
+        ref = gopher_quality_filters(df, id_col="url").where("gopher_pass")
+    else:
+        ref = gopher_repetition(df, id_col="url", dup_flavor="span").where(
+            "repetition_pass"
+        )
+    want = {r.doc_id for r in ref.collect()}
+    got = [r.url for r in out.collect()]
+    assert sorted(got) == sorted(want)
+    assert 0 < len(want) < len(docs)
+    assert metrics["after_filters"] == len(want)

@@ -10,10 +10,10 @@ cosine_topk_bruteforce, is the oracle-checked contract flavor and
 produces identical top-k by construction: same cosine, same 6-decimal
 rounding, same (cos desc, vec_id asc) tie order).
 
-Sweeps trained-IVF (codebook ~sqrt(N) = 1024 cells, train sample 16384,
-kernel assign engine) over nprobe 1..16, plus the best-LSH tuning from
-the 100k table for comparison. Writes one JSON line to
-BENCH/ANN_1M.json and prints it.
+Sweeps trained-IVF (codebook ~sqrt(N) = 1024 cells, train sample 16384;
+past 64 cells rows are assigned by the Arrow kernel) over nprobe 1..16,
+plus the best-LSH tuning from the 100k table for comparison. Writes one
+JSON line to BENCH/ANN_1M.json and prints it.
 
 Run: python tools/bench_ann_1m.py  (~5-10 min on local[32])
 """
@@ -104,7 +104,6 @@ def main() -> None:
             n_centroids=1024,
             nprobe=nprobe,
             codebook="kmeans",
-            assign_engine="kernel",
             train_sample=16384,
         )
         r = recall(df)
